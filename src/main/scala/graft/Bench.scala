@@ -40,8 +40,8 @@ object Bench {
       // (maxSplitBytes = max(openCost, totalBytes/defaultParallelism)),
       // which pins every sub-4MB-per-core table — the whole sf0.1
       // fixture set — to a near-serial scan front regardless of row
-      // groups. 16 KB is the honest local-NVMe/page-cache open cost and
-      // lets minPartitionNum (defaults to defaultParallelism) size the
+      // groups. The 64 KB default here (SPARK_GRAFT_OPEN_COST overrides
+      // it) lets minPartitionNum (defaults to defaultParallelism) size the
       // splits, so scan parallelism tracks SPARK_GRAFT_CPUS at every
       // core count. Scale posture: at warehouse scale files are
       // 128 MB–1 GB, where bytesPerCore >> openCost and this value is

@@ -12,9 +12,18 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
   *
   * then `SELECT qdot(a.qv, b.qv) FROM ...`.
+  *
+  * It also installs [[graft.storage.ForkFreeLocalFs]] for `file:` paths.
+  * The parser hook is the injection Spark calls with the session while it
+  * builds the session state, before any query can copy the Hadoop
+  * configuration; it returns Spark's parser unchanged.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectParser { (session, parser) =>
+      graft.storage.ForkFreeLocalFs.install(session)
+      parser
+    }
     ext.injectOptimizerRule(_ => QDotRewrite)
     ext.injectOptimizerRule(_ => graft.plans.PartitionDateInference)
     ext.injectFunction((
@@ -39,8 +48,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
   /** Defensive runtime registration for sessions built WITHOUT the
     * extension (e.g. a harness-owned SparkSession): registers qdot in
-    * the session's function registry if it is not already resolvable. */
+    * the session's function registry if it is not already resolvable,
+    * and installs the fork-free local filesystem. */
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit = {
+    graft.storage.ForkFreeLocalFs.install(spark)
     if (!spark.catalog.functionExists("qdot")) {
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "qdot", QDot.builder, "built-in")

@@ -47,8 +47,10 @@ object Prims {
     * the bytes moved are exactly the under-parallel input, the same bytes
     * a single task would otherwise process serially.
     *
-    * PRECONDITION: call on raw scans only. `df.rdd` is planning-only on
-    * an exchange-free plan, but under AQE it EXECUTES any shuffle query
+    * PRECONDITION: call on raw scans only. The scan's partition count
+    * is read from the `QueryExecution` the exchange assertion plans
+    * (`df.queryExecution.toRdd`). That is planning-only on an
+    * exchange-free plan, but under AQE it EXECUTES any shuffle query
     * stages in the plan — asserted below so a future non-scan caller
     * fails loudly instead of silently launching jobs (and mis-reading a
     * post-shuffle partition count as scan parallelism). At least one
@@ -72,7 +74,7 @@ object Prims {
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike]),
       "scanFanout must be applied to a raw scan (plan already contains an exchange)")
     val parallelism = sess.sparkContext.defaultParallelism
-    val scanParts = df.rdd.getNumPartitions // planning only — scan-only plan, see above
+    val scanParts = df.queryExecution.toRdd.getNumPartitions // planning only, see above
     // *3, not the r20 *2: once the fixture scans split (r21 multi-row-
     // group layout, 13-way documents scans at 32 cores), the 2x
     // threshold still fired and measured a wall WASH for extra shuffle
