@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared plumbing for the harness mains (Verify / Bench / Scratch /
-  * ScaleProbe) — one JSON escaper and one between-queries release, so the
-  * three mains can never drift apart. */
+/** Shared plumbing for the harness mains (Verify / Bench / Probe /
+  * ScaleProbe): one JSON escaper, one between-queries release, one
+  * shuffle meter and one timing protocol, so the mains cannot drift
+  * apart. */
 private[graft] object HarnessUtil {
 
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -50,31 +51,50 @@ private[graft] object HarnessUtil {
     buf.result()
   }
 
-  /** Drain the async listener bus so metrics accumulated by a
-    * SparkListener (per-query shuffle-byte deltas in Bench/Scratch) are
-    * fully delivered before the counter is read — a fixed sleep lags
-    * behind the bus under load and bleeds one query's task metrics into
-    * the next query's delta. A bus that cannot drain within 10 s is
-    * treated as drained-as-far-as-it-goes (same best-effort the sleep
-    * gave, minus the systematic lag). */
-  def drainListeners(spark: SparkSession): Unit =
-    try org.apache.spark.GraftSparkShim.waitListenerBusEmpty(spark.sparkContext, 10000L)
-    catch { case _: java.util.concurrent.TimeoutException => () }
-
-  /** Apply `SPARK_GRAFT_CONF="k=v;k=v"` to the session — the generic
-    * knob for running a harness main under non-default session confs.
-    * The motivating use: Verify over the SERVING LAYOUTS
-    * (`SPARK_GRAFT_CONF="spark.graft.layout.enabled=true;..."`) proves
-    * on the FULL oracle surface that no layout changes a result — the
-    * per-query LayoutSpec identity checks, promoted to all of
-    * SparkEntry. */
-  def applyEnvConf(spark: SparkSession): Unit =
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => spark.conf.set(k.trim, v.trim)
-        case _ => ()
-      }
+  /** Shuffle-write bytes summed over every task the session finishes. */
+  final class ShuffleMeter(spark: SparkSession) {
+    private val bytes = new java.util.concurrent.atomic.AtomicLong()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics)
+          .foreach(m => { bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten); () })
     })
+
+    /** Bytes written so far. Listener delivery is async, so the read
+      * first waits for the listener bus to drain — a fixed sleep lags
+      * behind the bus under load and bleeds one query's task metrics
+      * into the next query's delta. A bus that cannot drain within 10 s
+      * is read as far as it got. */
+    def drained(): Long = {
+      try org.apache.spark.GraftSparkShim.waitListenerBusEmpty(spark.sparkContext, 10000L)
+      catch { case _: java.util.concurrent.TimeoutException => () }
+      bytes.get()
+    }
+  }
+
+  /** Timed runs per measurement: the median of three, because one
+    * sample cannot tell a regression from a GC pause or machine noise. */
+  val TimedRuns = 3
+
+  /** The timing protocol wherever a query is timed: one warm-up run (JIT,
+    * codegen; not recorded), then [[TimedRuns]] timed runs, with a full
+    * release and GC after each so one run's pins and garbage are not paid
+    * for by the next. Returns the sorted samples in seconds and the
+    * average shuffle-write bytes per timed run. */
+  def timeRuns(spark: SparkSession, meter: ShuffleMeter)(run: => Unit)
+      : (IndexedSeq[Double], Long) = {
+    run
+    releaseAll(spark, gc = true)
+    val sb0 = meter.drained()
+    val samples = (1 to TimedRuns).map { _ =>
+      val t0 = System.nanoTime()
+      run
+      val dt = (System.nanoTime() - t0) / 1e9
+      releaseAll(spark, gc = true)
+      dt
+    }.sorted
+    (samples, (meter.drained() - sb0) / TimedRuns)
+  }
 
   /** Free everything a finished query pinned: catalog cache entries,
     * localCheckpoint blocks, AND tracked data-sized broadcasts.

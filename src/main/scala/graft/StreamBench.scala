@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming throughput bench: drive representative stateful operators
@@ -26,15 +25,7 @@ object StreamBench {
     require(total > ChunkRows,
       s"totalRows must exceed the $ChunkRows-row warm-up batch " +
         "(the measured window excludes it; nothing would be timed)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = HarnessSession(logLevel = "ERROR")
     // SPARK_GRAFT_STATE_STORE=rocksdb benches the at-scale store posture
     // (RocksDB + changelog checkpointing) against the default heap
     // provider; RocksDbStateStoreSpec pins output equivalence, this

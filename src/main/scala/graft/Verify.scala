@@ -2,44 +2,32 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (tools/oracle_check.py).
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [<query>...]`. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
+    val spark = HarnessSession()
     // optional trailing names restrict the dump (local iteration on a
     // new query); the driver's two-arg invocation dumps everything
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", (64 * 1024).toString)) // scan-split floor - see Bench
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_MATERIALIZE_MODE=reliable runs the WHOLE surface with
-    // every eager pin going through checkpoint-to-storage instead of
-    // localCheckpoint — the full-surface proof that materialize mode
-    // never changes results (MaterializeSpec pins 3 queries; this is
-    // the other ~45 pin sites). The checkpoint dir stands in for the
-    // cluster's fault-tolerant path.
-    sys.env.get("SPARK_GRAFT_MATERIALIZE_MODE").foreach { mode =>
-      spark.conf.set(graft.ops.Prims.MaterializeModeKey, mode)
-      if (mode == "reliable")
-        spark.sparkContext.setCheckpointDir(
-          sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/graft_reliable_ckpt"))
-    }
-    HarnessUtil.applyEnvConf(spark)
+    dump(spark, sfDir, outDir, args.drop(2).toSet)
+    spark.stop()
+  }
+
+  /** Writes each query's result (only the named ones when `only` is
+    * non-empty) to `<outDir>/<query>` as parquet, their oracle SQL to
+    * `oracle_sql.json` and any failures to `verify_errors.json`. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String, only: Set[String]): Unit = {
+    def wanted(name: String) = only.isEmpty || only(name)
     new java.io.File(outDir).mkdirs()
     // Record every declared query's outcome so the snapshot is self-describing:
     // a failing query lands in verify_errors.json with its message instead of
     // being silently absent from the result set.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+      .filter { case (name, _) => wanted(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -54,8 +42,8 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
       errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => wanted(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -348,7 +348,7 @@ object Dedup {
     * oracle-mirrored bit-for-bit: on non-negative hashes the logical
     * shift and bitwise-OR below equal the oracle's arithmetic shift
     * and sum of distinct powers) and the production-width probe
-    * (`ScaleProbe simwidth`: 64-bit fingerprints, Manku et al.'s
+    * (docs/SCALEPROBE_r10.md: 64-bit fingerprints, Manku et al.'s
     * configuration). The 64-bit token hash is xxhash64 — full-range,
     * sign bit included; every bit extraction is logical-shift + mask,
     * so a negative hash is just a 64-bit pattern, never an arithmetic
@@ -393,7 +393,7 @@ object Dedup {
     * does the heavy lifting; a production deployment uses a 64-bit
     * fingerprint with 16-bit bands (the paper's configuration), where
     * buckets are genuinely sparse — [[simhashHammingPairsImpl]] takes
-    * the widths as parameters and `ScaleProbe simwidth` probes the
+    * the widths as parameters; docs/SCALEPROBE_r10.md records the
     * 64/16 configuration on the 10× replica. */
   def simhashHammingPairs(s: SparkSession, dir: String): DataFrame =
     simhashHammingPairsImpl(s, dir, SimBits, SimHammingK)
@@ -852,7 +852,7 @@ object Dedup {
     * cap, which a chain-shaped component of depth 21 could legitimately
     * blow, this guard is unreachable for real data and exists solely so
     * a logic regression fails loudly instead of looping forever. The
-    * chain probe (`ScaleProbe chain`) pins the log bound empirically:
+    * chain probe (docs/SCALEPROBE_r10.md) pinned the log bound empirically:
     * round count grows by ~1 per chain-length DOUBLING. */
   private[graft] val StarMaxRounds = 64
 
@@ -1009,8 +1009,8 @@ object Dedup {
     * artifact is cheap to store and every reader is a metadata-sized
     * scan or corpus-scan + one join. The self-contained query forms
     * remain the oracle surface; PairGraphArtifactSpec proves each
-    * reader bit-identical to its self-contained twin, and `ScaleProbe
-    * artifact` measures the saved recompute. */
+    * reader bit-identical to its self-contained twin, and
+    * docs/SCALEPROBE_r10.md records the saved recompute. */
   def pairGraph(s: SparkSession, dir: String, outPath: String): Unit = {
     val pairs = ngramJaccardPairs(s, dir).materialized
     pairs.write.mode("overwrite").parquet(s"$outPath/pairs.parquet")

@@ -876,7 +876,7 @@ object PipelineOps {
     curateStages(s, dir).manifest
 
   /** The successive stage frames of [[curateManifest]] — exposed so the
-    * stage-timing recorder (`graft.CurateStages`) can wall-clock each
+    * stage-timing recorder (Bench's `curate_stages` block) can wall-clock each
     * stage boundary without duplicating the pipeline's definition. */
   private[graft] case class CurateStageFrames(
       dd: DataFrame, collapsed: DataFrame, clean: DataFrame,

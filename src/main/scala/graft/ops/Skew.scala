@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Manual skew mitigation — the library API behind the patterns the
-  * scale probes measure (`ScaleProbe skew`: two-phase salted
+  * scale probes measured (docs/SCALEPROBE_r9.md: two-phase salted
   * aggregation beats a direct hot-key groupBy ~2× at 100M rows;
-  * `ScaleProbe aqeskew`: AQE splits skewed SMJ partitions at runtime).
+  * docs/SCALEPROBE_r10.md: AQE splits skewed SMJ partitions at runtime).
   *
   * AQE's skew-join handling covers the JOIN case when it can see the
   * skew at runtime; these helpers are for the cases it does not own:

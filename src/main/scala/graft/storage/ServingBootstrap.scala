@@ -1,6 +1,5 @@
 package graft.storage
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deployment bootstrap CLI for the versioned events serving copy:
@@ -32,15 +31,7 @@ import org.apache.spark.sql.functions._
 object ServingBootstrap {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, root) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.HarnessSession()
     // "- -" is the explicit no-z-order sentinel, so the bloom spec at
     // args(4) is reachable without also opting into the curve
     val zorder = if (args.length >= 4 && args(2) != "-") Some((args(2), args(3))) else None

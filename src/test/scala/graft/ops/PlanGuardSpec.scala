@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{SparkEntry, SparkSpec, Tables}
 
 /** Fleet-wide physical-plan guard: NO query may plan a CartesianProduct,
   * and BroadcastNestedLoopJoin is allowed only where the build side is a
@@ -72,6 +72,13 @@ class PlanGuardSpec extends SparkSpec {
     assert(offenders.isEmpty, s"narrow-plan violations:\n  ${offenders.mkString("\n  ")}")
   }
 
+  /** `Prims.scanFanout`'s own predicate on the sf0.001 documents scan
+    * under the test session: true when the scan plans at most a third
+    * as many partitions as the session has cores. */
+  private lazy val documentsScanFansOut: Boolean =
+    Tables.documents(spark, dir).queryExecution.toRdd.getNumPartitions * 3 <=
+      spark.sparkContext.defaultParallelism
+
   /** FROZEN shuffle-exchange budget for EVERY query (initial executed
     * plan at sf0.001, counted by [[PlanGuardSpec.shuffleExchanges]]).
     * Any drift — a refactor sneaking in an extra Exchange, or an
@@ -80,7 +87,7 @@ class PlanGuardSpec extends SparkSpec {
     * and justify the change in the commit. Complements the bench's
     * shuffle-BYTES column: a new exchange is caught here even when
     * sf0.1 wall-time hides it. */
-  private val exchangeBudget: Map[String, Int] = Map(
+  private lazy val exchangeBudget: Map[String, Int] = Map(
     "heavy_hitters" -> 3,
     "bpe_merges" -> 1, // merge rounds materialize at construction (vocab-table aggs + 1-row argmax collects); the returned 12-row merge table keeps its final sort only
     "bpe_apply" -> 2, // training at construction as above; encode is one codegen replace-chain projection (no vocab join) + per-doc agg exchange + final sort
@@ -138,15 +145,11 @@ class PlanGuardSpec extends SparkSpec {
     "curate_manifest" -> 1,
     "date_funcs" -> 1,
     "decimal_arith" -> 1,
-    // r20: +1 — the conditional post-scan fan-out (Prims.scanFanout) on
-    // the gram stream; it parallelizes the otherwise-serial explode on a
-    // few-row-group corpus file and is a no-op on parallel scans.
-    // FIXTURE DEPENDENCY: this 4 encodes that the fan-out FIRES under the
-    // test session (sf0.001 documents is single-row-group and local[4]
-    // splits it into <=2 scan partitions). Regenerating sf0.001 with 3+
-    // row groups (or lowering openCostInBytes in SparkSpec) flips this
-    // back to 3 for an environment reason, not a plan regression.
-    "decontaminate" -> 4,
+    // r20: +1 when the conditional post-scan fan-out (Prims.scanFanout)
+    // fires on the gram stream; it parallelizes the otherwise-serial
+    // explode on a few-row-group corpus file and is a no-op on parallel
+    // scans, so the count follows the documents scan's planned splits
+    "decontaminate" -> (if (documentsScanFansOut) 4 else 3),
     "decontaminate_bloom" -> 3,
     "decontaminate_semantic" -> 3,
     "dedup_clusters" -> 1,
